@@ -174,16 +174,6 @@ object Bench {
                         prior: Map[String, Double]): Seq[Timing] = {
     val spark = EngineSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Measurement-harness-only knob (never set by the driver): session
-    // confs as `k=v;k2=v2`, applied before any timed run — lets a FORKED
-    // interleaved A/B toggle operator variants (e.g. graft.x10.probe=full)
-    // in the board regime, not just BenchScratch's one-JVM loop.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => spark.conf.set(k, v)
-        case _ => ()
-      }
-    })
     // Warm the shared machinery (parquet reader, codegen compiler, shuffle,
     // noop sink) before the first measured query: a cold JVM otherwise bills
     // ~3-4 s of one-time class loading to whichever query runs first — which

@@ -843,29 +843,13 @@ object Dedup {
       expression(split(textCol, " ")), 64, md5 = false))
   }
 
-  /** SimHash assembly from word-level (id, h) hash rows: one codegen'd
-    * partial/final agg of `nBits` ±1 vote sums, then bit assembly — instead
-    * of `nBits` interpreted `aggregate` lambdas per row; one narrow shuffle
-    * on id. */
-  private def simhashFromWordHashFrame(wordHashes: DataFrame, nBits: Int): DataFrame = {
-    val voteCols = (0 until nBits).map { bit =>
-      sum(when(shiftright(col("h"), bit).bitwiseAND(1) === 1, 1).otherwise(-1))
-        .as(s"v$bit")
-    }
-    wordHashes.groupBy("id").agg(voteCols.head, voteCols.tail: _*)
-      .select(col("id"),
-        (0 until nBits).map { bit =>
-          when(col(s"v$bit") > 0, lit(1L << bit)).otherwise(lit(0L))
-        }.reduce((a, b) => a.bitwiseOR(b)).as("sh"))
-  }
-
   /** The [[graft.functions.SimHashBits]] per-row signature — default since
     * round 15: the whole vote loop runs inside one codegen'd projection, so
     * the word rows never exist and the per-doc vote aggregation's shuffle
     * disappears (the [[graft.functions.WinnowSelect]] lesson applied to the
-    * other per-document-local sketch). `graft.simhash.impl=agg` keeps the
-    * exploded-word aggregate twin; equality between the two is
-    * property-pinned in DedupSpec for both hash families. */
+    * other per-document-local sketch). Equality with the exploded-word
+    * vote-aggregate formulation it replaced is property-pinned in
+    * DedupSpec for both hash families. */
   private def simhashExprFrame(df: DataFrame, textCol: String, idCol: String,
                                nBits: Int, md5: Boolean): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge._
@@ -874,32 +858,18 @@ object Dedup {
         expression(split(col(textCol), " ")), nBits, md5)).as("sh"))
   }
 
-  private def useAggSimhash(df: DataFrame): Boolean =
-    df.sparkSession.conf.getOption("graft.simhash.impl").contains("agg")
-
   /** SimHash frame (id, sh) over 64 xxhash64-derived bits. Identical vote
     * semantics to [[simhash]] (duplicates counted, empty text = one
     * empty-string word). */
   def simhashFrame(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    if (useAggSimhash(df))
-      simhashFromWordHashFrame(
-        df.select(col(idCol).as("id"), explode(split(col(textCol), " ")).as("w"))
-          .select(col("id"), xxhash64(col("w")).as("h")),
-        64)
-    else simhashExprFrame(df, textCol, idCol, 64, md5 = false)
+    simhashExprFrame(df, textCol, idCol, 64, md5 = false)
 
   /** PORTABLE SimHash twin: 60 bits from `int(md5(word)[0:15 hex])` — every
     * step (word hash, bit votes, bit assembly) is reproducible in ANSI-ish
     * SQL, so the signature pipeline is oracle-checkable end-to-end, exactly
     * like [[minhashLshPairsPortable]] vs the xxhash64 fast twin. */
   def simhashFramePortable(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    if (useAggSimhash(df))
-      simhashFromWordHashFrame(
-        df.select(col(idCol).as("id"), explode(split(col(textCol), " ")).as("w"))
-          .select(col("id"),
-            conv(substring(md5(col("w")), 1, 15), 16, 10).cast("bigint").as("h")),
-        60)
-    else simhashExprFrame(df, textCol, idCol, 60, md5 = true)
+    simhashExprFrame(df, textCol, idCol, 60, md5 = true)
 
   /** SimHash near-dup candidates: by pigeonhole, Hamming(a,b) ≤ k guarantees
     * at least one of (k+1) bit-blocks is equal — join per block, then verify
@@ -1572,22 +1542,19 @@ object Dedup {
          |  CASE WHEN i = 0 THEN $strCol
          |       ELSE concat(substring($strCol, 1, i - 1), substring($strCol, i + 1)) END)
          |""".stripMargin)
-    // dedup BEFORE the confirm in BOTH forms: a candidate pair surfaces
-    // once per shared variant key — up to L+2 times for a true pair, and
-    // repeatedly for the distance-2 impostors the neighborhood admits —
-    // so confirming first multiplies the levenshtein work by that
-    // key-overlap factor. Measured at sf0.1: confirm-first 5.13 s vs
-    // dedup-first 2.87 s.
+    // dedup BEFORE the confirm: a candidate pair surfaces once per shared
+    // variant key — up to L+2 times for a true pair, and repeatedly for the
+    // distance-2 impostors the neighborhood admits — so confirming first
+    // multiplies the levenshtein work by that key-overlap factor. Measured
+    // at sf0.1: confirm-first 5.13 s vs dedup-first 2.87 s.
     //
-    // Two physical forms, same result set:
-    //   - "rejoin" (DEFAULT, round 20): dedup the BARE id pair (narrow
-    //     exchange, hash aggregate with map-side partials) and re-attach
-    //     the strings to the ~|distinct pairs| survivors via two (id, s)
-    //     lookup joins;
-    //   - "carry" (`graft.editdist.impl=carry`, the pre-round-20 shape):
-    //     the strings ride through the pair dedup, so dropDuplicates
-    //     plants first(string) aggregates whose immutable buffers force a
-    //     SortAggregate pair, but the confirm needs no joins afterwards.
+    // Physical form (round 20, "rejoin"): dedup the BARE id pair (narrow
+    // exchange, hash aggregate with map-side partials) and re-attach the
+    // strings to the ~|distinct pairs| survivors via two (id, s) lookup
+    // joins. The pre-round-20 "carry" form let the strings ride through
+    // the pair dedup, so dropDuplicates planted first(string) aggregates
+    // whose immutable buffers force a SortAggregate pair, but the confirm
+    // needed no joins afterwards.
     // Round-21 adjudication (round-20 verdict #1 — the driver had
     // measured rejoin 2.76 → 3.65 s at 32 cores, the round's one flagged
     // regression, while the builder's claimed win was inside the noise
@@ -1596,50 +1563,31 @@ object Dedup {
     // half-way) measured rejoin [2.86, 2.99, 3.05, 3.12, 2.98, 3.03]
     // (median 3.01) vs carry [3.27, 3.12, 2.60, 3.19, 3.03, 3.38]
     // (median 3.16) — rejoin won 5 of 6 interleaved pairs with the
-    // tighter spread, so it stays the default; both forms' steady state
-    // on this box is ~2.9-3.1 s, which adjudicates the driver's 3.65 s
-    // as a drifted machine draw (its same-run vector started at 3.5+ s),
-    // now re-measurable by the budget-gated drift retry. The carry twin
-    // stays conf-reachable for re-adjudication. (All-columns distinct()
+    // tighter spread; both forms' steady state on this box is ~2.9-3.1 s,
+    // which adjudicates the board run's 3.65 s as a drifted machine draw
+    // (its same-run vector started at 3.5+ s). (All-columns distinct()
     // was a third form, rejected in r20: 4.45 s vs 3.40 — hashing 2
     // strings per candidate row lost to sorting 2 longs.)
-    val rejoin = !df.sparkSession.conf
-      .getOption("graft.editdist.impl").contains("carry")
-    if (rejoin) {
-      val keyed = df
-        .select(col(idCol).as("id"),
-          explode(array_distinct(variants)).as("variant"))
-        .select(col("id"), xxhash64(col("variant")).as("variant_h"))
-      val a = keyed.select(col("variant_h"), col("id").as("id_a"))
-      val b = keyed.select(col("variant_h"), col("id").as("id_b"))
-      // the (id, s) lookup the confirm re-attaches strings from — a plain
-      // re-scan of the input, no explode. Precondition (round-20 ADVICE):
-      // idCol must be unique in df — a duplicate id would fan out each
-      // re-attach join and emit duplicate pairs (the carry form emits
-      // each pair once regardless). The sole in-repo caller keys by the
-      // unique c_custkey.
-      val names = df.select(col(idCol).as("id"), col(strCol).as("s"))
-      a.join(b, Seq("variant_h"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"))
-        .dropDuplicates("id_a", "id_b")
-        .join(names.select(col("id").as("id_a"), col("s").as("s_a")), Seq("id_a"))
-        .join(names.select(col("id").as("id_b"), col("s").as("s_b")), Seq("id_b"))
-        .filter(levenshtein(col("s_a"), col("s_b")) === 1)
-        .select("id_a", "id_b")
-    } else {
-      val keyed = df
-        .select(col(idCol).as("id"), col(strCol).as("s"),
-          explode(array_distinct(variants)).as("variant"))
-        .select(col("id"), col("s"), xxhash64(col("variant")).as("variant_h"))
-      val a = keyed.select(col("variant_h"), col("id").as("id_a"), col("s").as("s_a"))
-      val b = keyed.select(col("variant_h"), col("id").as("id_b"), col("s").as("s_b"))
-      a.join(b, Seq("variant_h"))
-        .filter(col("id_a") < col("id_b"))
-        .dropDuplicates("id_a", "id_b")
-        .filter(levenshtein(col("s_a"), col("s_b")) === 1)
-        .select("id_a", "id_b")
-    }
+    val keyed = df
+      .select(col(idCol).as("id"),
+        explode(array_distinct(variants)).as("variant"))
+      .select(col("id"), xxhash64(col("variant")).as("variant_h"))
+    val a = keyed.select(col("variant_h"), col("id").as("id_a"))
+    val b = keyed.select(col("variant_h"), col("id").as("id_b"))
+    // the (id, s) lookup the confirm re-attaches strings from — a plain
+    // re-scan of the input, no explode. Precondition (round-20 ADVICE):
+    // idCol must be unique in df — a duplicate id would fan out each
+    // re-attach join and emit duplicate pairs. The sole in-repo caller
+    // keys by the unique c_custkey.
+    val names = df.select(col(idCol).as("id"), col(strCol).as("s"))
+    a.join(b, Seq("variant_h"))
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"))
+      .dropDuplicates("id_a", "id_b")
+      .join(names.select(col("id").as("id_a"), col("s").as("s_a")), Seq("id_a"))
+      .join(names.select(col("id").as("id_b"), col("s").as("s_b")), Seq("id_b"))
+      .filter(levenshtein(col("s_a"), col("s_b")) === 1)
+      .select("id_a", "id_b")
   }
 
   /** X2g — WINNOWING document fingerprints (Schleimer–Wilkerson–Aiken, the
@@ -1683,10 +1631,13 @@ object Dedup {
     * the gram-extraction comment documented for ≥100 KB docs) and NO gram
     * shuffle at all: only the ~2/(w+1)-density selected rows are ever
     * exploded, and the census aggregation is the single exchange left.
-    * `graft.winnow.impl=window` keeps the previous SQL formulation
-    * ([[winnowSelectedWindowed]]) — equality between the two is
-    * property-pinned in DedupSpec on the corpus, 100 KB long docs, and
-    * multi-byte UTF-8.
+    * Round 15 measured it 2.8x faster than the previous SQL-window
+    * formulation, interleaved at sf0.1 (1.2 vs 3.4 s median, identical
+    * hashes); on 200 × ~100 KB docs the gap is asymptotic (~0.5 s vs
+    * 156-217 s — the windowed form rescans each doc's UTF-8 head per gram
+    * and shuffles 20M grams). That formulation survives as a test-scope
+    * twin; equality between the two is property-pinned in DedupSpec on
+    * the corpus, 100 KB long docs, and multi-byte UTF-8.
     *
     * Round 16 made the Expression's hot loop allocation-free (60-bit long
     * per gram instead of a 15-char String, long window minima, hex-format
@@ -1698,75 +1649,17 @@ object Dedup {
     * threads, and it reuses [[graft.functions.SimHashBits]]'s prefix→long
     * conversion. Value identity re-pinned (WinnowProps, DedupSpec). */
   private[graft] def winnowSelected(df: DataFrame, textCol: String,
-                                    idCol: String, k: Int, w: Int): DataFrame =
-    if (df.sparkSession.conf.getOption("graft.winnow.impl").contains("window"))
-      winnowSelectedWindowed(df, textCol, idCol, k, w)
-    else {
-      require(k >= 2 && w >= 2, "need k >= 2 and w >= 2")
-      df.filter(length(col(textCol)) >= k + w - 1)
-        .select(col(idCol).as("doc_id"),
-          (length(col(textCol)) - (k - 1)).cast("long").as("n_grams"),
-          explode(org.apache.spark.sql.GraftColumnBridge.column(
-            graft.functions.WinnowSelect(
-              org.apache.spark.sql.GraftColumnBridge.expression(col(textCol)),
-              k, w))).as("s"))
-        .select(col("doc_id"), col("n_grams"),
-          col("s.pos").as("pos"), col("s.h").as("h"))
-    }
-
-  /** The SQL-window formulation [[winnowSelected]] shipped with through
-    * round 14 (now the `graft.winnow.impl=window` fallback and the
-    * cross-validation twin): explode every gram, then two window passes —
-    * pass 1 gives `wmin(e)` = min hash of the window ENDING at position e;
-    * position p is a minimum of SOME window containing it iff
-    * `max(wmin(e) for e in [p, p+w−1])` equals `h(p)` — wmin(e) ≤ h(p) for
-    * every window containing p, so equality at the max IS existence.
-    * Both passes share one (doc_id, pos) sort. */
-  private[graft] def winnowSelectedWindowed(df: DataFrame, textCol: String,
-                                            idCol: String, k: Int, w: Int): DataFrame = {
+                                    idCol: String, k: Int, w: Int): DataFrame = {
     require(k >= 2 && w >= 2, "need k >= 2 and w >= 2")
-    // Gram extraction = substring + md5 in ONE codegen'd generate+project
-    // stage. Three shapes were measured at sf0.1 in round 14 (WinnowScratch
-    // + solo forks) and this one won them; round 15's per-doc
-    // WinnowSelect Expression (the byte-offset escape hatch this comment
-    // used to defer) then beat it 2.8x interleaved (1.2 vs 3.4 s median,
-    // identical hashes) and is now the default — this SQL form remains as
-    // the cross-validation twin. On the long-doc regime the gap is
-    // asymptotic, not constant: 200 docs × ~100 KB measure ~0.5 s (expr)
-    // vs 156-217 s (this form) in the same session — WinnowScratch — the
-    // O(len²) substring head-rescan plus the 20M-gram shuffle vs one
-    // O(len·k) byte pass. The round-14 ranking, kept for the record:
-    //   - this form: the explode and the hash projection fuse inside
-    //     whole-stage codegen, so the doc text is never copied per gram
-    //     row and downstream rows are narrow (doc_id, pos, h). substring
-    //     rescans UTF-8 from the head (O(len) per gram), acceptable while
-    //     docs are ≲ a few KB;
-    //   - a one-time per-doc char ARRAY carried through the explode: O(k)
-    //     random access, but the ~10 KB array is copied into every gram
-    //     row's UnsafeRow — GC storms, 43 s cold runs;
-    //   - hashing inside a `transform` lambda over the char array (narrow
-    //     rows AND O(k) access): higher-order lambdas don't participate in
-    //     whole-stage codegen, and the interpreted per-element path was
-    //     ~2× slower than this form.
-    // The hash is the md5 15-hex-char PREFIX as a string — hex is
-    // order-isomorphic to its numeric value, so window min/max select the
-    // same positions and a per-gram `conv` buys nothing.
-    val grams = df.filter(length(col(textCol)) >= k + w - 1)
-      .select(col(idCol).as("doc_id"), col(textCol).as("__t"),
-        (length(col(textCol)) - (k - 1)).cast("long").as("n_grams"))
-      .withColumn("pos", explode(expr(s"sequence(1, length(__t) - ${k - 1}, 1)")))
-      .withColumn("h",
-        substring(md5(expr(s"substring(__t, pos, $k)")), 1, 15))
-      .drop("__t")
-    val ord = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val back = ord.rowsBetween(-(w - 1), 0)
-    val fwd = ord.rowsBetween(0, w - 1)
-    grams
-      .withColumn("wmin",
-        when(col("pos") >= w, min(col("h")).over(back))) // null on partial windows
-      .withColumn("sel_max", max(col("wmin")).over(fwd)) // max ignores nulls
-      .filter(col("h") === col("sel_max"))
-      .drop("wmin", "sel_max")
+    df.filter(length(col(textCol)) >= k + w - 1)
+      .select(col(idCol).as("doc_id"),
+        (length(col(textCol)) - (k - 1)).cast("long").as("n_grams"),
+        explode(org.apache.spark.sql.GraftColumnBridge.column(
+          graft.functions.WinnowSelect(
+            org.apache.spark.sql.GraftColumnBridge.expression(col(textCol)),
+            k, w))).as("s"))
+      .select(col("doc_id"), col("n_grams"),
+        col("s.pos").as("pos"), col("s.h").as("h"))
   }
 
   def winnowFingerprints(df: DataFrame, textCol: String, idCol: String,

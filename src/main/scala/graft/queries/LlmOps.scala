@@ -485,8 +485,8 @@ object LlmOps {
     * [[FixtureCache]] under `gtName` (shared by the three float-ANN
     * entries, which annotate against the SAME slice); the measured body
     * stays the approximate serving path plus the recall join. Round 17's
-    * adjudication (see [[spineRecallRows]]) kept this two-pass shape as
-    * the default; `graft.x3.assembly=fold` selects the one-pass fold. */
+    * adjudication (see [[spineRecallRows]]) kept this two-pass shape
+    * over a one-pass fold. */
   /** The shared exact-ground-truth fixture of the float-ANN entries — a
     * pure function of (corpus, query slice, k), run-level cached. */
   private def cachedGt(s: SparkSession, dir: String, gtName: String,
@@ -523,23 +523,12 @@ object LlmOps {
     * join paid twice lose to one barrier; the opposite of the integer
     * trained-ANN trade, so round-10 ADVICE still stands for this family)
     * and a GT-derived spine (time-equal, +1 audited exchange for its
-    * distinct). Default stays the two-pass shape;
-    * `graft.x3.assembly=fold` selects the fold for A/B. */
+    * distinct). The two-pass shape is the one kept. */
   private def spineRecallRows(s: SparkSession, dir: String, gtName: String,
                               approx: DataFrame, queries: DataFrame,
                               corpus: DataFrame, k: Int): DataFrame =
-    if (s.conf.getOption("graft.x3.assembly").contains("fold")) {
-      val a = approx.localCheckpoint(true)
-      val gt = cachedGt(s, dir, gtName, queries, corpus, k)
-      queries.select(col("vec_id").as("query_id")).localCheckpoint(true)
-        .join(broadcast(recallAggOf(a, gt, k, "recall_pm")),
-          Seq("query_id"), "left")
-        .join(broadcast(a), Seq("query_id"), "left")
-        .na.fill(Map("rank" -> -1, "neighbor_id" -> -1L,
-          "sim" -> 0.0, "recall_pm" -> 0L))
-    } else
-      withQuerySpine(queries,
-        withRecallPm(s, dir, gtName, approx, queries, corpus, k))
+    withQuerySpine(queries,
+      withRecallPm(s, dir, gtName, approx, queries, corpus, k))
 
   private def withRecallPm(s: SparkSession, dir: String, gtName: String,
                            approx: DataFrame, queries: DataFrame,
@@ -569,14 +558,9 @@ object LlmOps {
     // InjectRuntimeFilter build an 8 MB bloom_filter_agg subquery (+1
     // exchange, + one full embeddings re-scan) just to pre-filter the
     // ≤|queries|·k-row checkpointed rows RDD. Checkpointing hides the
-    // selective scan from the injection rule; semantics identical
-    // (`graft.x3.spine=scan` keeps the round-15 shape for A/B).
-    val spineBase = queries.select(col("vec_id").as("query_id"))
-    val spine =
-      if (queries.sparkSession.conf.getOption("graft.x3.spine").contains("scan"))
-        spineBase
-      else spineBase.localCheckpoint(true)
-    spine
+    // selective scan from the injection rule; semantics identical to the
+    // round-15 live-scan spine.
+    queries.select(col("vec_id").as("query_id")).localCheckpoint(true)
       // rows = |queries|·k annotated candidates (bounded, checkpointed) —
       // broadcast-build it or the left outer spine join plans a
       // SortMergeJoin with two exchanges (the PlanAuditSpec gate caught
@@ -1048,16 +1032,10 @@ object LlmOps {
     // with the oracle contract unchanged — it replays train+encode+serve
     // from raw data regardless). The SEED arm keeps its live encode: the
     // full encode mechanics stay live-measured in-entry, and the seed
-    // codebook is not a model anyone would persist.
-    // `graft.x3.pqserve=live` restores the round-16 both-arms-live shape
-    // for A/B (hash-identical; BenchScratch pins it).
-    val trained =
-      if (s.conf.getOption("graft.x3.pqserve").contains("live"))
-        Similarity.pqServeInt(queries, m, cachedTrainedPqCb(s, dir),
-          mSub = 16, dsub = 4, k = 5)
-      else
-        Similarity.pqServeIntFromCodes(queries, cachedTrainedPqCodes(s, dir),
-          cachedTrainedPqCb(s, dir), dsub = 4, k = 5)
+    // codebook is not a model anyone would persist. The round-16
+    // both-arms-live shape was hash-identical to this one.
+    val trained = Similarity.pqServeIntFromCodes(queries,
+      cachedTrainedPqCodes(s, dir), cachedTrainedPqCb(s, dir), dsub = 4, k = 5)
     val seeded = Similarity.pqServeInt(queries, m, seedCb, mSub = 16,
       dsub = 4, k = 5)
     annotatedTrainedRows(queries, trained, seeded, cachedGtInt100(s, dir),

@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Throwaway interleaved A/B harness for streaming-census tuning (memory:
-  * bench-variance discipline — never compare timings across sessions).
-  * Not part of the driver surface; run via
+/** Interleaved same-session A/B of Spark session-conf variants of one
+  * entry (timings are only comparable within one session). Not part of the
+  * Bench/Verify surface; run via
   * `sbt "Test/runMain graft.BenchScratch p29_stream_correlate"`. */
 object BenchScratch {
   def main(args: Array[String]): Unit = {
@@ -29,65 +29,17 @@ object BenchScratch {
       }
     }
 
-    val all = Seq(
-      "base" -> Map.empty[String, String],
-      "noData-off" -> Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"),
-      "parts1" -> Map("graft.census.shuffle" -> "1"),
-      "parts1+noData-off" -> Map(
-        "graft.census.shuffle" -> "1",
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"),
-      "parts1+rocksdb" -> Map(
-        "graft.census.shuffle" -> "1",
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
     val variants =
-      if (name.contains("p28"))
-        // round-15: explicit sentinel timeout batch vs scheduler no-data
-        Seq("evict-tick" -> Map("graft.p28.evict" -> "tick"),
-          "evict-nodata" -> Map("graft.p28.evict" -> "nodata"))
-      else if (name.contains("p32"))
-        // round-15: sentinel-tick eviction batch vs scheduler no-data batches
-        Seq("evict-tick" -> Map("graft.p32.evict" -> "tick"),
-          "evict-nodata" -> Map("graft.p32.evict" -> "nodata"))
-      else if (name.contains("pq_trained"))
-        // round-17: trained arm served from the persisted encode artifact
-        // vs the round-16 both-arms-live-encode shape
-        Seq("codes" -> Map("graft.x3.pqserve" -> "codes"),
-          "live" -> Map("graft.x3.pqserve" -> "live"))
-      else if (name.contains("x3_ann"))
-        // round-17: ONE-pass spine+recall assembly (approx rows join once)
-        // vs the round-16 two-pass shape (recall join, then spine outer);
-        // crossed with the runtime bloom-filter injection on/off (the r16
-        // spine lesson suspected INSIDE the serves)
-        Seq("assembly-fold" -> Map("graft.x3.assembly" -> "fold"),
-          "assembly-twopass" -> Map("graft.x3.assembly" -> "twopass"),
-          "fold+no-bloom" -> Map("graft.x3.assembly" -> "fold",
-            "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false"),
-          "twopass+no-bloom" -> Map("graft.x3.assembly" -> "twopass",
-            "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false"))
-      else if (name.contains("x10_pipeline_incremental") ||
-        name.contains("x10_state_reps"))
-        // round-18: partition-pruned bucketed band-index probe vs the
-        // full-scan frame form (at sf0.1 the delta touches every bucket,
-        // so this isolates the pruning machinery's own cost)
-        Seq("probe-pruned" -> Map("graft.x10.probe" -> "pruned"),
-          "probe-full" -> Map("graft.x10.probe" -> "full"),
-          "probe-shingleprune" -> Map("graft.x10.probe" -> "pruned",
-            "graft.x10.shingleprune" -> "1"))
-      else if (name.contains("q10_approx"))
-        // round-19: the exact-NDV evidence arm vs the sketch-only
-        // production shape (the r7 body) — the q10 re-baseline split
-        Seq("evidence" -> Map.empty[String, String],
-          "sketch-only" -> Map("graft.q10.evidence" -> "0"))
-      else if (name.contains("winnow"))
-        // round-15: per-doc codegen byte-offset selection vs windowed SQL
-        Seq("expr" -> Map("graft.winnow.impl" -> "expr"),
-          "window" -> Map("graft.winnow.impl" -> "window"))
-      else if (name.contains("simhash"))
-        // round-15: per-row codegen signature vs exploded-word aggregate
-        Seq("expr" -> Map("graft.simhash.impl" -> "expr"),
-          "agg" -> Map("graft.simhash.impl" -> "agg"))
-      else all
+      if (name.contains("x3_ann"))
+        // the runtime bloom-filter injection on/off (the round-16 spine
+        // lesson suspected INSIDE the serves)
+        Seq("base" -> Map.empty[String, String],
+          "no-bloom" -> Map("spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false"))
+      else
+        Seq("base" -> Map.empty[String, String],
+          "noData-off" -> Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"),
+          "rocksdb" -> Map("spark.sql.streaming.stateStore.providerClass" ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
 
     // warmup once, then interleave 3 rounds of every variant
     run("warmup", Map.empty)

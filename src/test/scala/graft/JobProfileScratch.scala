@@ -13,12 +13,6 @@ object JobProfileScratch {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = EngineSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => spark.conf.set(k, v)
-        case _ => ()
-      }
-    })
     val fn = SparkEntry.queries(name)
     // warm run (codegen/JIT) then profiled run
     fn(spark, dir).write.format("noop").mode("overwrite").save()

@@ -670,6 +670,27 @@ class SimilaritySpec extends SparkSpec {
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
     assert(msgs(e).exists(_.contains("packedArgmin")),
       s"expected the packedArgmin domain error, got: ${msgs(e).take(2)}")
+    // the sign hole (round-21 ADVICE #2): a NEGATIVE component borrows
+    // across the packed fields. d2 goes negative when the squared-distance
+    // sum wraps — with ANSI arithmetic off, 3.5e9 deltas square past 2^63
+    // — and a centroid id can be negative in a hand-built codebook. Both
+    // must raise, not mis-assign.
+    def domainError(f: => Unit): Unit = {
+      val err = intercept[Exception](f)
+      assert(msgs(err).exists(_.contains("packedArgmin")),
+        s"expected the packedArgmin domain error, got: ${msgs(err).take(2)}")
+    }
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try domainError {
+      Similarity.pqEncodeInt(Seq((101L, Seq(3500000000L, 0L))).toDF("vec_id", "mv"),
+        cb, mSub = 1, dsub = 2).collect()
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+    domainError {
+      Similarity.pqEncodeInt(Seq((102L, Seq(1L, 1L))).toDF("vec_id", "mv"),
+        Seq((0, -1L, Seq(0L, 0L))).toDF("j", "cid", "bv"), mSub = 1, dsub = 2)
+        .collect()
+    }
     // the integer-id bounds fail at the public entry points (bounded
     // driver-side checks, no job runs)
     val m = Seq((0L, Seq(1L, 1L))).toDF("vec_id", "mv")
@@ -683,6 +704,10 @@ class SimilaritySpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Similarity.appendIvfIndexInt(spark, m.toDF("vec_id", "embedding"),
         Array((1L << 16, Array(0L, 0L))), "/tmp/never-written")
+    }
+    intercept[IllegalArgumentException] {
+      Similarity.appendIvfIndexInt(spark, m.toDF("vec_id", "embedding"),
+        Array((-1L, Array(0L, 0L))), "/tmp/never-written")
     }
     ()
   }

@@ -145,7 +145,7 @@ class PlanSpec extends SparkSpec {
       _.dropWhile(!_.isLetter).startsWith("Exchange"))
     assert(nEx <= 2, s"expected at most the census agg's two exchanges, got $nEx:\n$p")
     assert(!p.contains("Window"),
-      s"the windowed-SQL selection leaked back in (graft.winnow.impl?):\n$p")
+      s"the windowed-SQL selection leaked back in:\n$p")
     assert(p.contains("Generate"), s"expected the selected-rows explode:\n$p")
     assert(p.contains("winnow_select"), s"expected the WinnowSelect node:\n$p")
     // narrow post-shuffle rows: selection runs BEFORE the first SHUFFLE
